@@ -83,13 +83,17 @@ def char_ngram_codes(text: ColumnOrName, n: int = 3) -> Column:
     point < 2²¹; n ≤ 3 keeps 21·n ≤ 63 bits), so |A∩B|, |A| and |B|
     over the coded arrays equal those over ``char_ngrams`` string arrays
     EXACTLY — no hashing, no collisions, the jaccard division sees the
-    same integers bit-for-bit. Purpose (r15, guide §2.3 "narrower
-    types"): a θ-join's array_intersect over long arrays runs on
-    primitive comparisons where the string form pays per-element
-    UTF8String hashing — measured ~40% off the trigram pair-join stage
-    on top of the integer-threshold rewrite. Use when the gram STRINGS
-    never surface in the output; ``char_ngrams`` remains the
-    string-facing form."""
+    same integers bit-for-bit. The injectivity rests on Spark's
+    ``ascii()`` returning the full Unicode code point of the first
+    character (Spark 3.x+; pinned by the tests on pyspark 4.1). An engine
+    whose ``ascii()`` returns the first UTF-8 byte would collide distinct
+    grams and drift every jaccard built on these codes. Purpose (r15,
+    guide §2.3 "narrower types"): a θ-join's array_intersect over long
+    arrays runs on primitive comparisons where the string form pays
+    per-element UTF8String hashing — measured ~40% off the trigram
+    pair-join stage on top of the integer-threshold rewrite. Use when
+    the gram STRINGS never surface in the output; ``char_ngrams``
+    remains the string-facing form."""
     if n < 1 or 21 * n > 63:
         raise ValueError("char_ngram_codes: need 1 <= n <= 3 for a "
                          "collision-free 63-bit pack")

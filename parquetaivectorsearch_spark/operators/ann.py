@@ -17,9 +17,10 @@ chasing structure that does not distribute. The Spark-native equivalent of
   parquet partition directories, so probing nprobe lists is a partition-
   pruned scan. At 100 TB with nlist=4096 / nprobe=64, a search reads ~1.6%
   of the files; no driver state, no single-machine index.
-- **search**: nearest-nprobe centroids per query (tiny, driver/broadcast) →
-  scan pruned lists → exact dot-product distance → per-query top-k via the
-  same TakeOrderedAndProject / window machinery as the exact path.
+- **search**: nearest-nprobe centroids per query (tiny, driver-side) → ONE
+  scan of the probed-list union → one float32 matmul per Arrow batch,
+  masked to each query's own probe set → per-query top-k through a
+  (distance, id) window, or a row-local radius predicate.
 
 **Metric handling.** The reference's metric is dot-product distance over
 vectors that are unit-norm in its dataset (Program.cs:29-30) but not in
@@ -356,7 +357,9 @@ class IVFIndex:
 
 def probe_lists(queries: DataFrame, index: IVFIndex, nprobe: int,
                 vec_col: str = "query_vec") -> DataFrame:
-    """(query row) → nprobe rows (…, list_id): the lists to scan per query."""
+    """(query row) → nprobe rows (…, list_id): the lists to scan per query.
+    The distributed form of _probe_union's arithmetic, for query sides too
+    large to collect (knn_graph)."""
     c = index.centroids.astype(np.float32)
     metric = index.metric
     npb = min(nprobe, len(c))
@@ -370,116 +373,101 @@ def probe_lists(queries: DataFrame, index: IVFIndex, nprobe: int,
     return queries.withColumn("list_id", F.explode(probes(F.col(vec_col))))
 
 
-def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
-               nprobe: int = 4, id_col: str = "vec_id",
-               vec_col: str = "embedding", where=None) -> DataFrame:
-    """ANN top-k per query by dot-product distance (the reference's metric).
-    `queries` is (query_id, query_vec), small enough to broadcast (the
-    serving fan-out shape).
-
-    Plan: broadcast(queries × their probe lists) ⋈ lists on list_id —
-    Catalyst pushes the list_id filter into the partitioned scan when
-    `index.lists` comes from a partitioned artifact — → numpy batch scoring
-    → per-query top-k. Output: (query_id, vec_id, distance, rank).
-
-    ``where``: optional metadata predicate (a Column) applied to the lists
-    BEFORE scoring — pre-filtered vector search. The inverted lists keep
-    every corpus column, so the predicate composes with partition pruning:
-    the scan reads nprobe list directories and pushes the predicate into
-    them, rather than post-filtering an oversampled top-k' result.
-    """
-    from parquetaivectorsearch_spark.functions.vector import vec_dot_pandas
-
-    lists = index.lists if where is None else index.lists.filter(where)
-    probed = probe_lists(queries, index, nprobe)
-    scored = (
-        lists.join(F.broadcast(probed), "list_id")
-        .select(
-            "query_id", F.col(id_col),
-            (F.lit(1.0) - vec_dot_pandas(F.col(vec_col), F.col("query_vec"))
-             ).alias("distance"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("distance", id_col)
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ivf_search_bulk(index: IVFIndex, queries: DataFrame, k: int = 20,
-                    nprobe: int = 4, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Arrow-bulk IVF serve: identical probe semantics to ivf_search, but
-    the probed-list union is scanned ONCE and each Arrow batch scores all
-    queries with a single numpy matmul.
-
-    Why it exists: ivf_search's broadcast probe join duplicates every
-    matched corpus row per probing query AND ships the query vector on
-    every row through the pandas-UDF scorer — at the reference's width
-    (1536 dims, 8 queries, nprobe/nlist = 1/4) that is ~8× the Arrow
-    bytes of the probed data (measured 3.1s vs the brute-force bulk
-    path's 0.84s at 50k×1536, BENCH_NOTES r8). Here transfer = probed
-    bytes, full stop: per-query probe sets are computed driver-side
-    against the (tiny) centroid matrix — exactly probe_lists' arithmetic,
-    so recall is bit-identical — the scan prunes to the probed-list
-    UNION (partition-pruned on a persisted artifact), and rows a query
-    did not probe are masked to +inf after the batch matmul (wasted
-    flops, saved bandwidth — the wide regime is bandwidth-bound). Each
-    batch emits ≤ k rows per query; the global merge is one tiny window
-    over k × n_batches × n_queries rows.
-
-    ``queries`` is a bounded serving batch (same contract as
-    knn_join_bulk: driver-materialized). Output matches ivf_search:
-    (query_id, vec_id, distance, rank); ties break on (distance, id)."""
-    import pandas as pd
-
-    q_pdf = queries.toPandas()  # bounded: the serving batch
-    q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = np.stack(q_pdf["query_vec"].to_numpy()).astype(np.float32)
+def _probe_union(index: IVFIndex, q_mat: np.ndarray,
+                 nprobe: int) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side probe sets of a bounded query batch → (union, mask):
+    ``union`` = sorted ids of every list some query probes, ``mask[i, j]``
+    = query j probes union[i]. Same arithmetic as probe_lists, so the
+    probe sets are identical (pinned in tests/test_ann.py)."""
     cents = index.centroids.astype(np.float32)
     npb = min(nprobe, len(cents))
-    probes = _nearest(_pre_query(q_mat, index.metric), cents, n=npb) \
-        .reshape(len(q_ids), npb)
-    union = np.array(sorted({int(l) for row in probes for l in row}),
-                     dtype=np.int64)
-    # (n_union, nq) mask: mask[i, j] = query j probes union[i]; batch rows
-    # map into it with one vectorized searchsorted, no per-row Python
-    probe_sets = [set(int(x) for x in row) for row in probes]
-    mask_mat = np.array([[int(l) in s for s in probe_sets] for l in union])
+    nq = len(q_mat)
+    if not nq:
+        return np.zeros(0, dtype=np.int64), np.zeros((0, 0), dtype=bool)
+    probes = _nearest(_pre_query(q_mat.astype(np.float32), index.metric),
+                      cents, n=npb).reshape(nq, npb)
+    union = np.unique(probes).astype(np.int64)
+    mask = np.zeros((len(union), nq), dtype=bool)
+    mask[np.searchsorted(union, probes), np.arange(nq)[:, None]] = True
+    return union, mask
+
+
+def _probed_scan(index: IVFIndex, queries: DataFrame, nprobe: int, select,
+                 id_col: str, vec_col: str, where) -> DataFrame:
+    """The IVF scoring scan: the probed-list UNION (partition-pruned on a
+    persisted artifact, ``where`` pushed into the same scan) is read ONCE
+    and each Arrow batch scores every query with one float32 matmul; rows
+    a query did not probe are masked to +inf. ``select(distances)`` picks
+    the row indices a query keeps from one batch. Transfer = probed bytes:
+    no per-query duplication of corpus rows, no query vector per row.
+    Output: (query_id, id_col, distance)."""
+    q_pdf = queries.select("query_id", "query_vec").toPandas()  # bounded
+    q_ids = q_pdf["query_id"].to_numpy()
+    q_mat = (np.stack(q_pdf["query_vec"].to_numpy()).astype(np.float32)
+             if len(q_pdf) else np.zeros((0, 0), dtype=np.float32))
+    union, mask = _probe_union(index, q_mat, nprobe)
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy()
-            lids = pdf["list_id"].to_numpy()
             emb = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
             dist = 1.0 - (emb @ q_mat.T).astype(np.float64)  # (rows, nq)
-            allowed = mask_mat[np.searchsorted(union, lids)]  # (rows, nq)
-            dist[~allowed] = np.inf
+            upos = np.searchsorted(union, pdf["list_id"].to_numpy())
+            dist[~mask[upos]] = np.inf
             out_q, out_i, out_d = [], [], []
             for j, qid in enumerate(q_ids):
-                dj = dist[:, j]
-                finite = np.nonzero(np.isfinite(dj))[0]
-                if not len(finite):
-                    continue
-                take = min(k, len(finite))
-                # O(n) tie-inclusive cut (operators/knn._tie_safe_cut);
-                # the global (distance, id) window owns the tie-break, so
-                # emitting the extra boundary-tied rows is exact
-                cand = finite[_tie_safe_cut(dj[finite], take)]
+                cand = select(dist[:, j])
                 out_q.extend([int(qid)] * len(cand))
                 out_i.extend(ids[cand].tolist())
-                out_d.extend(dj[cand].tolist())
+                out_d.extend(dist[cand, j].tolist())
             yield pd.DataFrame(
                 {"query_id": out_q, id_col: out_i, "distance": out_d})
 
-    scan = index.lists.filter(
-        F.col("list_id").isin([int(x) for x in union])) \
+    lists = index.lists if where is None else index.lists.filter(where)
+    scan = lists.filter(F.col("list_id").isin([int(x) for x in union])) \
         .select("list_id", id_col, vec_col)
-    partials = scan.mapInPandas(
+    return scan.mapInPandas(
         score, f"query_id BIGINT, {id_col} BIGINT, distance DOUBLE")
+
+
+def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
+               nprobe: int = 4, id_col: str = "vec_id",
+               vec_col: str = "embedding", where=None) -> DataFrame:
+    """ANN top-k per query by dot-product distance (the reference's metric).
+    ``queries`` is (query_id, query_vec), a bounded serving batch that is
+    collected to the driver (the knn_join_bulk contract).
+
+    Plan: driver-side probe sets against the centroid matrix → one
+    _probed_scan of the probed-list union → each batch emits ≤ k rows per
+    query (plus boundary ties) → one tiny (distance, id) window over
+    k × n_batches × n_queries rows. Output: (query_id, vec_id, distance,
+    rank).
+
+    ``where``: optional metadata predicate (a Column) applied to the lists
+    BEFORE scoring — pre-filtered vector search. The inverted lists keep
+    every corpus column, so the predicate composes with partition pruning:
+    the scan reads the probed list directories and pushes the predicate
+    into them, rather than post-filtering an oversampled top-k' result.
+    """
+    def top_k(d):
+        finite = np.nonzero(np.isfinite(d))[0]
+        # O(n) tie-inclusive cut (operators/knn._tie_safe_cut); the global
+        # (distance, id) window owns the tie-break, so emitting the extra
+        # boundary-tied rows is exact
+        return finite[_tie_safe_cut(d[finite], min(k, len(finite)))]
+
+    partials = _probed_scan(index, queries, nprobe, top_k, id_col, vec_col,
+                            where)
     w = Window.partitionBy("query_id").orderBy("distance", id_col)
     return (partials.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
+
+
+# Former name of the probed-union serve path, kept because the benchmark
+# workloads and the legacy bench.py call it by this name.
+ivf_search_bulk = ivf_search
 
 
 def ivf_range_search(index: IVFIndex, queries: DataFrame, radius: float,
@@ -488,24 +476,14 @@ def ivf_range_search(index: IVFIndex, queries: DataFrame, radius: float,
     """ANN radius query (Milvus-style range search): every vector in the
     probed lists with dot-product distance < ``radius``.
 
-    Strictly cheaper than ``ivf_search``: same broadcast probe join, but the
-    radius predicate is row-local, so there is NO per-query window and NO
-    shuffle after the scan — the missing-neighbor risk is only list pruning
-    (vectors in un-probed lists), identical to top-k's. Output:
+    Same _probed_scan as ``ivf_search``, but the radius predicate is
+    row-local, so there is NO per-query window and NO shuffle after the
+    scan — the missing-neighbor risk is only list pruning (vectors in
+    un-probed lists), identical to top-k's. Output:
     (query_id, vec_id, distance)."""
-    from parquetaivectorsearch_spark.functions.vector import vec_dot_pandas
-
-    lists = index.lists if where is None else index.lists.filter(where)
-    probed = probe_lists(queries, index, nprobe)
-    return (
-        lists.join(F.broadcast(probed), "list_id")
-        .select(
-            "query_id", F.col(id_col),
-            (F.lit(1.0) - vec_dot_pandas(F.col(vec_col), F.col("query_vec"))
-             ).alias("distance"),
-        )
-        .filter(F.col("distance") < F.lit(radius))
-    )
+    return _probed_scan(index, queries, nprobe,
+                        lambda d: np.nonzero(d < radius)[0],
+                        id_col, vec_col, where)
 
 
 def compact_hot_lists(spark: SparkSession, index_path: str,
@@ -654,10 +632,12 @@ def knn_graph(corpus: DataFrame, k: int = 3, nlist: int | None = None,
     """Approximate k-NN graph over the WHOLE corpus → (src, dst, distance,
     rank): every vector is simultaneously a query and a candidate.
 
-    The serve path (ivf_search) broadcasts its query batch — correct for a
-    bounded batch, impossible when the query side IS the corpus. Here both
-    sides meet in ONE shuffle each on list_id (a cogroup): the query side
-    fans out to its nprobe nearest lists, the candidate side sits in its
+    The serve path (ivf_search) collects its query batch to the driver —
+    correct for a bounded batch, impossible when the query side IS the
+    corpus. Here both sides meet in ONE shuffle each on list_id (a
+    cogroup): the query side fans out to its nprobe nearest lists (the
+    probe_lists UDF — the same probe sets ivf_search computes on the
+    driver), the candidate side sits in its
     one assigned list, so candidate work is bounded to within-list pairs
     (Σ_i |list_i| × probes into i) — never all-pairs. Each list block is
     scored with chunked float64 BLAS matmuls and emits only its per-query

@@ -204,7 +204,11 @@ def connected_components_hashmin(pairs: DataFrame, a_col: str = "doc_a",
     its component (the paper's 2|V|+|E| space bound), so a giant
     component costs O(|component|) rows on one key at the END — the
     known hash-to-min caveat; the dedup regime (bounded near-clique
-    clusters) never approaches it."""
+    clusters) never approaches it.
+
+    Running out of ``max_iter`` returns the labels as they stand, which
+    may not be converged: ``stats["converged"]`` is True only when the
+    loop left through the fixpoint check."""
     e = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
     ef = e.filter(F.col("u") != F.col("v"))
     sym = ef.union(ef.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -213,7 +217,7 @@ def connected_components_hashmin(pairs: DataFrame, a_col: str = "doc_a",
          .select(F.col("u").alias("node"), F.col("v").alias("member"))
          .repartition("node").dropDuplicates(["node", "member"])
          .localCheckpoint(eager=False))
-    done = 0
+    done, converged = 0, False
     while done < max_iter:
         inner = min(2, max_iter - done)
         prev = H
@@ -247,9 +251,11 @@ def connected_components_hashmin(pairs: DataFrame, a_col: str = "doc_a",
                     F.count("_old").alias("no")).first())
         done += inner
         if int(chk["nn"]) == int(chk["n"]) == int(chk["no"]):
+            converged = True
             break
     if stats is not None:
         stats["rounds"] = done
+        stats["converged"] = converged
     return (H.groupBy("node").agg(F.min("member").alias("cluster_id"))
             .select(F.col("node").alias("doc_id"), "cluster_id"))
 

@@ -653,8 +653,9 @@ def filtered_ann_strategy(n_total: int, n_allowed: int, k: int,
     - ``"hnsw_oversearch"`` (hnsw_search_filtered): mild filters. The
       beam over-searches at k' = ceil(k/sel)·oversample — cheap while
       k' stays near k.
-    - ``"ivf_prefilter"`` (ann.ivf_search(where=...)): selective
-      filters below the measured crossover. Probe cost is flat in sel
+    - ``"ivf_prefilter"`` (ann.ivf_search(where=...), the predicate
+      pushed into the probed-union scan): selective filters below the
+      measured crossover. Probe cost is flat in sel
       while over-search grows as k/sel; measured 1.9× cheaper at
       sel=0.05 and 4× at 0.005.
     - ``"exact_filtered"``: degenerate filters — k' would reach the

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from parquetaivectorsearch_spark.operators.knn import _tie_safe_cut
+
 
 def _kmeans_books(x: np.ndarray, m: int, k: int,
                   iters: int, seed: int,
@@ -403,12 +405,10 @@ def pq_adc_search(codes_df: DataFrame, codebooks: np.ndarray,
             take = min(shortlist, len(ids))
             for qi, qid in enumerate(q_ids):
                 s = scores[qi]
-                # lexsort, not argpartition: exact ADC ties at the batch
-                # boundary (duplicate codes) must keep the id-winning row
-                # or the final (approx_score desc, id) window can surface
-                # a different id — same reasoning as ivf_search_bulk
-                # (operators/ann.py:350) and ivf_pq_search below
-                cand = np.lexsort((ids, -s))[:take]
+                # tie-inclusive cut: exact ADC ties at the batch boundary
+                # (duplicate codes) all reach the heap, which owns the
+                # (score, id) tie-break
+                cand = _tie_safe_cut(-s, take)
                 heap = best[int(qid)]
                 for i in cand:
                     # (score, -id): on equal score the SMALLER id is the
@@ -477,16 +477,13 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     ``pq_encode(assigned, books, extra_cols=("list_id",))``); persist it
     partitioned by list_id and the probe becomes a partition-pruned scan.
 
-    Probe semantics are bit-identical to ivf_search/ivf_search_bulk (the
-    same driver-side centroid arithmetic), and the mask follows
-    ivf_search_bulk: the probed-list UNION is scanned once, every batch
-    scores all queries with one LUT gather, and (query, row) pairs the
-    query did not probe are masked out after the gather — transfer =
-    probed code bytes, full stop. Boundary selection is lexsort on
-    (-score, id), not argpartition: exact ADC ties at the per-batch
-    shortlist cut must keep the id-winning row or the global
-    (approx_score desc, id) window can rank a different id than the flat
-    ADC scan (same reasoning as ivf_search_bulk, operators/ann.py:350).
+    Probe sets and mask come from ann._probe_union, the helper ivf_search
+    uses: the probed-list UNION is scanned once, every batch scores all
+    queries with one LUT gather, and (query, row) pairs the query did not
+    probe are masked out after the gather — transfer = probed code bytes,
+    full stop. The per-batch shortlist cut is tie-inclusive
+    (knn._tie_safe_cut): exact ADC ties at the boundary all reach the
+    global (approx_score desc, id) window, which owns the tie-break.
 
     ``residual=True`` is the IVFADC scoring rule for residual-encoded
     codes (train_pq_residual + pq_encode(residual_centroids=…)):
@@ -501,8 +498,7 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     composes the two, e.g. queries_ann.q_ivf_pq_topk). At nprobe = nlist
     the shortlist ids equal the flat pq_adc_search pipeline bit-for-bit
     (pinned in tests/test_pq.py)."""
-    from parquetaivectorsearch_spark.operators.ann import (_nearest,
-                                                           _pre_query)
+    from parquetaivectorsearch_spark.operators.ann import _probe_union
 
     m, kk, dsub = codebooks.shape
     q_pdf = queries.toPandas()  # bounded: the serving batch
@@ -514,14 +510,7 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     luts = np.einsum("qjd,jcd->qjc",
                      lut_q.reshape(len(q_ids), m, dsub), codebooks)
 
-    cents = index.centroids.astype(np.float32)
-    npb = min(nprobe, len(cents))
-    probes = _nearest(_pre_query(q_mat.astype(np.float32), index.metric),
-                      cents, n=npb).reshape(len(q_ids), npb)
-    union = np.array(sorted({int(l) for row in probes for l in row}),
-                     dtype=np.int64)
-    probe_sets = [set(int(x) for x in row) for row in probes]
-    mask_mat = np.array([[int(l) in s for s in probe_sets] for l in union])
+    union, mask = _probe_union(index, q_mat, nprobe)
     # residual offsets: off[q, u] = <query_q, raw-space centroid of
     # union list u> — the coarse term of the IVFADC decomposition
     off = (q_mat @ index.centroids.astype(np.float64)[union, :q_mat.shape[1]].T
@@ -538,16 +527,14 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
             upos = np.searchsorted(union, lids)
             if off is not None:
                 scores = scores + off[:, upos]
-            allowed = mask_mat[upos].T  # (q, batch)
+            allowed = mask[upos].T  # (q, batch)
             scores[~allowed] = -np.inf
             out_q, out_i, out_s = [], [], []
             for qi, qid in enumerate(q_ids):
                 s = scores[qi]
                 finite = np.nonzero(np.isfinite(s))[0]
-                if not len(finite):
-                    continue
-                take = min(shortlist, len(finite))
-                cand = finite[np.lexsort((ids[finite], -s[finite]))[:take]]
+                cand = finite[_tie_safe_cut(-s[finite],
+                                            min(shortlist, len(finite)))]
                 out_q.extend([int(qid)] * len(cand))
                 out_i.extend(ids[cand].tolist())
                 out_s.extend(s[cand].tolist())

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from parquetaivectorsearch_spark.operators import ann as ANN
@@ -435,12 +436,10 @@ def test_ivf_index_stats_invariants(spark):
     assert rows[0].imbalance >= 1.0
 
 
-def test_ivf_search_bulk_matches_ivf_search(spark):
-    """The Arrow-bulk serve path must return the same ids as the broadcast
-    probe-join path at the SAME nprobe (probe sets are computed with the
-    same centroid arithmetic), and equal the exact brute-force KNN at full
-    probe. Fixture neighbor gaps dwarf the float32-vs-sequential-fold
-    scoring difference, so id-set equality is stable."""
+def test_ivf_search_full_probe_exact_and_range_consistent(spark):
+    """At full probe ivf_search equals the exact brute-force KNN. At any
+    nprobe the top-k and radius selectors of the shared scan agree: every
+    top-k id with distance below r is in ivf_range_search(radius=r)."""
     from parquetaivectorsearch_spark.operators import knn as KNN
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -449,17 +448,45 @@ def test_ivf_search_bulk_matches_ivf_search(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
 
     for nprobe in (3, 8):
-        a, b = {}, {}
-        for r in ANN.ivf_search(index, queries, k=10, nprobe=nprobe).collect():
-            a.setdefault(r.query_id, set()).add(r.vec_id)
-        for r in ANN.ivf_search_bulk(index, queries, k=10, nprobe=nprobe).collect():
-            b.setdefault(r.query_id, set()).add(r.vec_id)
-        assert a == b, nprobe
+        top = ANN.ivf_search(index, queries, k=10, nprobe=nprobe).collect()
+        # the median top-k distance: some rows fall below it, some above
+        r = sorted(row.distance for row in top)[len(top) // 2]
+        want = {(row.query_id, row.vec_id) for row in top if row.distance < r}
+        got = {(row.query_id, row.vec_id) for row in
+               ANN.ivf_range_search(index, queries, radius=r,
+                                    nprobe=nprobe).collect()}
+        assert want and want <= got, nprobe
 
+    b = {}
+    for row in top:  # nprobe = nlist = 8
+        b.setdefault(row.query_id, set()).add(row.vec_id)
     exact = {}
-    for r in KNN.knn_join(emb, queries, k=10).collect():
-        exact.setdefault(r.query_id, set()).add(r.vec_id)
+    for row in KNN.knn_join(emb, queries, k=10).collect():
+        exact.setdefault(row.query_id, set()).add(row.vec_id)
     assert b == exact  # full probe == exact
+
+
+@pytest.mark.parametrize("metric", ANN.METRICS)
+def test_probe_union_matches_probe_lists(spark, metric):
+    """The driver-side probe sets behind ivf_search/ivf_pq_search equal
+    the probe_lists UDF's (what knn_graph and the probed-fraction counter
+    use), per query, for every metric and with nprobe > nlist clamped."""
+    import numpy as np
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    index = ANN.IVFIndex.build(emb, nlist=6, metric=metric)
+    queries = _queries(emb, n=8)
+    q_pdf = queries.toPandas()
+    q_mat = np.stack(q_pdf["query_vec"].to_numpy())
+    for nprobe in (2, 6, 50):
+        union, mask = ANN._probe_union(index, q_mat, nprobe)
+        got = {int(q): {int(union[i]) for i in np.nonzero(mask[:, j])[0]}
+               for j, q in enumerate(q_pdf["query_id"])}
+        want = {}
+        for row in ANN.probe_lists(queries, index, nprobe).collect():
+            want.setdefault(row.query_id, set()).add(row.list_id)
+        assert got == want, (metric, nprobe)
+        assert all(len(s) == min(nprobe, 6) for s in got.values())
 
 
 def test_semantic_dedup_prune_keeps_one_per_clone_group(spark):
@@ -529,11 +556,11 @@ def test_auto_index_picks_tier_by_measured_crossover(spark):
 
 def test_bulk_topk_tie_break_on_id_with_duplicates(spark):
     """ADVICE r8: exact-duplicate vectors tie at the batch-k boundary, and
-    the per-batch partial top-k in ivf_search_bulk / knn_graph must keep
-    the id-winning rows (lexsort, not argpartition) or the global
-    (distance, id) window ranks whichever ids happened to survive the
-    cut. Corpus: 12 exact copies of one vector — top-5 MUST be the 5
-    LOWEST duplicate ids in both paths."""
+    the per-batch partial top-k in ivf_search / knn_graph must pass every
+    boundary-tied row on (knn._tie_safe_cut) or the global (distance, id)
+    window ranks whichever ids happened to survive the cut. Corpus: 12
+    exact copies of one vector — top-5 MUST be the 5 LOWEST duplicate
+    ids in both paths."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (ArrayType, FloatType, LongType,
@@ -557,7 +584,7 @@ def test_bulk_topk_tie_break_on_id_with_duplicates(spark):
         StructType([StructField("query_id", LongType()),
                     StructField("query_vec", ArrayType(FloatType()))]))
     got = sorted(r.vec_id
-                 for r in ANN.ivf_search_bulk(index, q, k=5, nprobe=1)
+                 for r in ANN.ivf_search(index, q, k=5, nprobe=1)
                  .collect())
     assert got == [0, 1, 2, 3, 4], got
     # knn_graph: every duplicate's neighbors are the LOWEST other dup ids

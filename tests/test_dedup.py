@@ -506,6 +506,28 @@ def test_hashmin_logarithmic_on_chain(spark):
     assert got2 == {p: 0 for p in perm}
 
 
+def test_hashmin_reports_convergence(spark):
+    """A 16-node path needs more than one hash-to-min round: max_iter=1
+    must report converged=False, and the default cap must report True
+    with labels equal to min-label connected_components."""
+    from parquetaivectorsearch_spark.operators.components import (
+        connected_components, connected_components_hashmin)
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(15)],
+                                  "doc_a BIGINT, doc_b BIGINT")
+    capped = {}
+    connected_components_hashmin(pairs, max_iter=1, stats=capped).collect()
+    assert capped == {"rounds": 1, "converged": False}
+
+    stats = {}
+    got = {r.doc_id: r.cluster_id
+           for r in connected_components_hashmin(pairs,
+                                                 stats=stats).collect()}
+    assert stats["converged"] is True
+    assert got == {r.doc_id: r.cluster_id
+                   for r in connected_components(pairs).collect()}
+
+
 def test_hashmin_empty_and_self_loop(spark):
     from parquetaivectorsearch_spark.operators.components import (
         connected_components_hashmin)

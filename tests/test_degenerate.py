@@ -117,6 +117,20 @@ def test_ivf_range_search_degenerate(spark):
     assert tight.count() == 0
 
 
+def test_ivf_search_empty_query_batch(spark):
+    """An empty query batch probes nothing and returns no rows, not an
+    error, from both selectors of the IVF scan."""
+    from parquetaivectorsearch_spark.operators import ann as ANN
+
+    vecs = _vecs(spark, [(0, [1.0] * 8), (1, [-1.0] * 8)])
+    index = ANN.IVFIndex.build(vecs, nlist=1)
+    q = vecs.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"))
+    assert ANN.ivf_search(index, q, k=5, nprobe=1).count() == 0
+    assert ANN.ivf_range_search(index, q, radius=100.0, nprobe=1).count() == 0
+
+
 def test_maxsim_and_matryoshka_shapes_on_fixture(spark):
     """The row-local MaxSim and two-stage matryoshka queries hold their
     exact k=10 bound on the smoke fixture (second scale besides the
